@@ -145,43 +145,8 @@ object StreamBench {
     (p, fs)
   }
 
-  /** Standalone A/B of the flagship stream's two sinks (foreachBatch →
-    * commitEpoch vs the native DSv2 streaming write), end-to-end with the
-    * full stateful pipeline — the complement to SinkBench's isolated
-    * measurement. Interleaved reps, medians in one JSON line. */
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val reps = sys.env.getOrElse("GRAFT_STREAMAB_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-sink-ab")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val results = (0 until reps).flatMap { r =>
-      val order = if (r % 2 == 0) Seq(false, true) else Seq(true, false)
-      order.map(n => n -> run(spark, sfDir, nativeSink = n))
-    }
-    def med(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
-    val byMode = results.groupBy(_._1).map { case (n, rs) =>
-      val tps = rs.map(x => x._2.turns / x._2.sec)
-      (if (n) "native" else "foreachBatch") ->
-        (rs.head._2.turns, med(rs.map(_._2.sec)), med(tps))
-    }
-    val detail = byMode.toSeq.sortBy(_._1).map { case (m, (turns, sec, tps)) =>
-      s""""$m":{"turns":$turns,"medianSec":${f"$sec%.2f"},"medianTps":${tps.toLong}}"""
-    }.mkString(",")
-    // scalastyle:off println
-    println(s"""{"metric":"stream_sink_ab","cpus":$cpus,"reps":$reps,$detail}""")
-    // scalastyle:on println
-    spark.stop()
-  }
-
   def run(spark: SparkSession, sfDir: String, numBuckets: Int = 0,
-          slicesOverride: String = null, nativeSink: Boolean = true): StreamResult = {
+          slicesOverride: String = null): StreamResult = {
     val slices =
       if (slicesOverride != null) slicesOverride else ensureSlices(spark, sfDir)
     val buckets =
@@ -219,8 +184,7 @@ object StreamBench {
         sketchDepth = sys.env.getOrElse("GRAFT_SK_DEPTH", "4").toInt,
         sketchWidth = sys.env.getOrElse("GRAFT_SK_WIDTH", "8192").toInt)
       val q = Pipeline.runRedactionToTable(spark, slices, tableRoot, cp,
-        p = benchParams, numBuckets = effBuckets, maxFilesPerTrigger = 1,
-        nativeSink = nativeSink)
+        p = benchParams, numBuckets = effBuckets, maxFilesPerTrigger = 1)
       q.awaitTermination()
       val sec = (System.nanoTime() - t0) / 1e9
       val batches = q.recentProgress.toSeq.map { pr =>

@@ -13,6 +13,7 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions
 import org.apache.spark.sql.sources.Filter
 
+import graft.functions.{CmsAggExpr, ShinglesExpr}
 import graft.sources.{IcebergLiteTable, PrunePredicate}
 import graft.table.IcebergLite
 
@@ -34,6 +35,9 @@ import graft.table.IcebergLite
   * patched deltas), row order, bucket ids and recomputed stats, and prunes
   * candidates with the same manifest stats the scan path uses.
   *
+  * It also registers the engine's native SQL functions (`graft_shingles`,
+  * `graft_cms_sketch`, `graft_cms_est`; see [[graft.functions.GraftFunctions]]).
+  *
   * Scale note: the conjuncts of the WHERE clause that translate to pushable
   * V1 filters feed [[PrunePredicate]] (ts-interval + conv_id-bucket file
   * pruning) — a conv-scoped UPDATE at 10^12-turn scale rewrites one
@@ -45,6 +49,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPostHocResolutionRule(session => GraftUpdateRewrite(session))
     ext.injectPlannerStrategy(_ => GraftCommandStrategy)
+    ext.injectFunction(ShinglesExpr.registration)
+    ext.injectFunction(CmsAggExpr.registration)
+    ext.injectFunction(CmsAggExpr.estRegistration)
   }
 }
 

@@ -1,21 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
-
-/** Session extensions registering the engine's native SQL functions —
-  * attach with `SparkSession.builder().withExtensions(new GraftExtensions)`
-  * or `spark.sql.extensions=graft.functions.GraftExtensions`:
+/** The engine's native SQL functions. A session built with
+  * [[graft.catalog.GraftExtensions]] has them from the start:
   *
   * {{{ SELECT doc_id, explode(graft_shingles(text, 5)) FROM docs }}}
   */
-final class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(ShinglesExpr.registration)
-    ext.injectFunction(CmsAggExpr.registration)
-    ext.injectFunction(CmsAggExpr.estRegistration)
-  }
-}
-
 object GraftFunctions {
   /** Register the engine's SQL functions on an already-running session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {

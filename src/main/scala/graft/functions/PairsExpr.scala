@@ -28,10 +28,13 @@ import org.apache.spark.sql.types._
   */
 final case class OrderedPairsExpr(child: Expression) extends UnaryExpression {
 
+  // null ELEMENTS are rejected: the kernel reads the array as primitive
+  // longs, where a null would silently become a 0 doc id
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case ArrayType(LongType, false) => TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_ordered_pairs needs an array<bigint> column, got $other")
+      s"graft_ordered_pairs needs an array<bigint> column without null " +
+        s"elements, got $other")
   }
 
   override def dataType: DataType = ArrayType(

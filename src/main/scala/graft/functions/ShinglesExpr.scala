@@ -68,7 +68,8 @@ object ShinglesExpr {
   def shinglesCol(text: Column, k: Int): Column =
     GraftColumnBridge.column(ShinglesExpr(GraftColumnBridge.expression(text), k))
 
-  /** Registration triple for [[GraftExtensions]] / manual injection:
+  /** Registration triple for [[graft.catalog.GraftExtensions]] /
+    * [[GraftFunctions.register]]:
     * SQL surface `graft_shingles(text, k)` with a literal k. */
   val registration: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("graft_shingles"),

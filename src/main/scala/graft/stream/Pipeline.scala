@@ -327,8 +327,7 @@ object Pipeline {
                           p: RedactionParams = RedactionParams(),
                           numBuckets: Int = 8,
                           maxFilesPerTrigger: Int = 1,
-                          trigger: Trigger = Trigger.AvailableNow(),
-                          nativeSink: Boolean = true): StreamingQuery = {
+                          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import spark.implicits._
     enforceStateFormat(checkpoint)
     val table = new IcebergLite(tableRoot)
@@ -346,29 +345,17 @@ object Pipeline {
     val checked = src.where(graft.operators.Validation.invalidReason.isNull ||
       col("conv_id") === FlushConvId).as[Turn]
     val red = Metrics.observed(redactedStream(checked, p))
-    val writer = red.writeStream
+    // the native DSv2 sink: rows go straight from the stateful stage's
+    // output tasks into bucket files, and the driver commit is
+    // metadata-only
+    red.writeStream
       .queryName("redaction-to-table")
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-    // Two sinks, one epoch protocol and one physical layout (parity
-    // spec-pinned): foreachBatch commits a driver-planned write job per
-    // batch; the native DSv2 path ships rows straight from the stateful
-    // stage's output tasks into bucket files (Spark-arranged clustering,
-    // metadata-only driver commit — measured 1.12x on the pure sink path,
-    // see BENCH.md SinkBench). DEFAULT since round 6: native (round-5
-    // VERDICT #2 — parity, kill/resume byte-identity and cross-sink
-    // content equality were proven in round 5; the opt-in default only
-    // existed to keep that round's records path-comparable).
-    if (nativeSink)
-      writer.format("graft.sources.IcebergLiteSource")
-        .option("path", tableRoot)
-        .start()
-    else
-      writer.foreachBatch { (df: Dataset[RedactedTurn], epochId: Long) =>
-        table.commitEpoch(df.toDF(), "redaction-to-table", epochId, numBuckets)
-        ()
-      }.start()
+      .format("graft.sources.IcebergLiteSource")
+      .option("path", tableRoot)
+      .start()
   }
 
   /** Companion quarantine query (A3/E2 dead-letter rows, not just counts):

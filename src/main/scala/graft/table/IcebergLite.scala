@@ -735,9 +735,10 @@ final class IcebergLite(val root: String) {
     * rewriting the table. Candidate files (manifest-pruned via `prune` —
     * the DSv2 [[graft.sources.PrunePredicate]] at the SQL surface, so a
     * `conv_id` purge touches one bucket's files per epoch, not the table)
-    * are probed with a column-pruned count first (only the predicate's
-    * columns are decoded — a false-positive candidate never pays a text
-    * read); files with no matching row are left untouched (path, stats and
+    * go through the shared mutation pipeline ([[mutate]]): a column-pruned
+    * probe first (only the predicate's columns are decoded — a
+    * false-positive candidate never pays a text read); files with no
+    * matching row are left untouched (path, stats and
     * bucket unchanged), files fully matched are dropped,
     * partially-matched files are rewritten without the matching rows —
     * preserving row order, bucket `partitionId`, lineage columns and
@@ -768,7 +769,7 @@ final class IcebergLite(val root: String) {
     deleteImpl(spark, condition, predicateText, prune, mor = false)
 
   /** Shared body of [[deleteWhere]] / [[deleteWhereMor]] — ONE definition
-    * of the delete callbacks (fully-matched file dropped outright; partial
+    * of the delete frames (fully-matched file dropped outright; partial
     * match rewritten without the matching rows, row order preserved) so
     * the cow and mor paths can never diverge on semantics. */
   private def deleteImpl(spark: SparkSession,
@@ -776,17 +777,18 @@ final class IcebergLite(val root: String) {
                          predicateText: String,
                          prune: Seq[FileSet] => Seq[DataFileMeta],
                          mor: Boolean): Long =
-    rewriteWhere(spark, condition, predicateText, prune, mor)(
-      (df, hit) => df.filter(!hit), dropFullyMatched = true,
-      (df, hit) => Seq("delete" -> df.filter(hit)))
+    rewriteWhere(spark, condition, predicateText, prune, mor,
+      dropFullyMatched = true) { (all, hit) =>
+      (all.filter(!hit), Seq("delete" -> all.filter(hit)))
+    }
 
   /** Row-level DELETE by MERGE-ON-READ deletion vectors — the answer to
     * "a 10-row purge should not rewrite a 1 GiB file". The same
-    * manifest-pruned per-file machinery as [[deleteWhere]], but a file
+    * manifest-pruned pipeline as [[deleteWhere]] ([[mutate]]), but a file
     * whose matched fraction is at most `spark.sql.graft.dvMaxFraction`
     * (default 0.2) records its deleted ORIGINAL-ROW POSITIONS as a tiny
-    * parquet sidecar (the batched DV write in `rewriteWhere`) instead of being rewritten:
-    * commit cost is O(matched rows), never O(file bytes). The manifest
+    * parquet sidecar (the pipeline's batched DV write) instead of being
+    * rewritten: commit cost is O(matched rows), never O(file bytes). The manifest
     * entry keeps the SAME data path with the `dv` reference and the exact
     * survivor rowCount, so the whole manifest algebra — effective views,
     * per-epoch stream patching, compaction folding (a DV'd source entry
@@ -805,7 +807,7 @@ final class IcebergLite(val root: String) {
     deleteImpl(spark, condition, predicateText, prune, mor = true)
 
   /** Row-level UPDATE by copy-on-write rewrite — the same manifest-pruned
-    * per-file machinery as [[deleteWhere]], but matched rows are kept with
+    * pipeline as [[deleteWhere]] ([[mutate]]), but matched rows are kept with
     * `assignments` applied instead of dropped ("fix the tool label on these
     * turns" without rewriting the table). All assignment values are
     * evaluated against the ORIGINAL row (SQL UPDATE semantics: `SET a = b,
@@ -846,29 +848,29 @@ final class IcebergLite(val root: String) {
           "contract — DELETE the rows and INSERT corrected ones instead")
     }
     val assign = assignments.toMap
-    rewriteWhere(spark, condition, predicateText, prune)({ (df, hit) =>
+    rewriteWhere(spark, condition, predicateText, prune, mor = false,
+      dropFullyMatched = false) { (all, hit) =>
       // ONE projection so every RHS sees original column values; the
       // bookkeeping columns pass through the `case None` branch
-      df.select(df.columns.toSeq.map { c =>
+      val rewritten = all.select(all.columns.toSeq.map { c =>
         assign.get(c) match {
           case Some(v) => when(hit, v.cast(typeOf(c))).otherwise(col(c)).as(c)
           case None    => col(c)
         }
       }: _*)
-    }, dropFullyMatched = false, { (df, hit) =>
       // CDC images: pre = the matched rows as they were; post = the SAME
       // rows with assignments applied unconditionally (every row of `pre`
       // matched, and re-evaluating `hit` post-assignment would be wrong —
       // `SET tool = 'x' WHERE tool = 'y'` no longer matches its own result)
-      val pre = df.filter(hit)
+      val pre = all.filter(hit)
       val post = pre.select(pre.columns.toSeq.map { c =>
         assign.get(c) match {
           case Some(v) => v.cast(typeOf(c)).as(c)
           case None    => col(c)
         }
       }: _*)
-      Seq("update_preimage" -> pre, "update_postimage" -> post)
-    })
+      (rewritten, Seq("update_preimage" -> pre, "update_postimage" -> post))
+    }
   }
 
   /** SQL-MERGE-style upsert, keyed by the table's natural key
@@ -890,15 +892,15 @@ final class IcebergLite(val root: String) {
     *     buckets (a ≤ numBuckets-element aggregate of the feed) select
     *     the only files that can contain matches — a feed touching k
     *     conversations probes at most k buckets' files per epoch;
-    *  3. each candidate is probed with a column-pruned key semi-join
-    *     against its bucket's slice of the staged feed (false-positive
-    *     candidates never read the text column) and matched files are
-    *     rewritten — matched rows replaced by source values (all
-    *     non-lineage columns; `_ord` row-id keeps the original row order
-    *     through the join) or anti-joined away for DELETE;
-    *  4. not-matched source rows are committed as a NEW epoch via the
+    *  3. not-matched source rows are committed as a NEW epoch via the
     *     normal deterministic sink layout, but the snapshot is stamped
     *     `pendingGen` — invisible to all readers;
+    *  4. the shared mutation pipeline ([[mutate]]) probes the candidates
+    *     with a column-pruned key semi-join against the staged feed
+    *     (false-positive candidates never read the text column) and
+    *     rewrites matched files — matched rows replaced by source values
+    *     (all non-lineage columns; the original row position keeps the
+    *     row order through the join) or anti-joined away for DELETE;
     *  5. ONE `delete-<gen>.json` manifest (removes + rewrites +
     *     `activatesEpoch`) is the single atomic commit point: rewrites
     *     and inserts appear together or not at all. Crash before (5)
@@ -979,10 +981,9 @@ final class IcebergLite(val root: String) {
       deleteRecursively(stagingSrc)
       throw new IllegalArgumentException(msg)
     }
-    // ONE validation job (round-6, guide §1.2): row count, NULL-key count,
-    // distinct-key count AND every layout's occupied-bucket set come out
-    // of a single aggregate over the staged feed — the round-5 shape paid
-    // one job per check plus one per bucket layout.
+    // ONE validation job: row count, NULL-key count, distinct-key count
+    // AND every layout's occupied-bucket set come out of a single
+    // aggregate over the staged feed.
     val base = effectiveFileSets
     val layoutNbs = base.map(_.numBuckets).distinct.filter(_ > 0)
     val vAggs: Seq[org.apache.spark.sql.Column] = Seq(
@@ -1008,193 +1009,11 @@ final class IcebergLite(val root: String) {
       layoutNbs.map { nb =>
         nb -> vRow.getAs[scala.collection.Seq[Int]](s"__b$nb").toSet
       }.toMap
-    val candidates: Seq[(DataFileMeta, Int)] = base.flatMap { fs =>
+    val candidates: Seq[DataFileMeta] = base.flatMap { fs =>
       fs.files.filter(f => fs.numBuckets <= 0 ||
         bucketSets(fs.numBuckets).contains(f.partitionId))
-        .map(f => (f, fs.numBuckets))
     }
-    val bucketsOf: Map[String, Int] =
-      base.flatMap(fs => fs.files.map(_.path -> fs.numBuckets)).toMap
-    val srcEpoch: Map[String, Long] =
-      snapshots.flatMap(s => s.files.map(_.path -> s.epochId)).toMap ++
-        deletes.flatMap(_.fileSets.flatMap(fs =>
-          fs.files.map(_.path -> fs.sourceEpoch)))
-
-    // ---- batched probe (round-6, guide §1.2/§2.4): ONE key-pruned job
-    // computes every candidate's matched-row count — the round-5 shape ran
-    // one semi-join count job PER candidate file. The per-file bucket
-    // slice of the feed was pruning only (a key matches iff it is in the
-    // feed at all — bucket is a function of conv_id), so the combined
-    // semi-join computes identical counts. Prior deletion vectors are
-    // anti-joined in the same job, keeping MOR-deleted rows invisible.
-    import scala.collection.parallel.CollectionConverters._
-    val probeKeySchema = org.apache.spark.sql.types.StructType(
-      declared.fields.filter(f => keys.contains(f.name)))
-    val matchedByName: Map[String, Long] =
-      if (matched.isEmpty || candidates.isEmpty) Map.empty
-      else {
-        var probe = spark.read.schema(probeKeySchema)
-          .parquet(candidates.map { case (f, _) => s"$root/${f.path}" }: _*)
-          .withColumn("__graft_file",
-            element_at(split(col("_metadata.file_path"), "/"), -1))
-          .withColumn("__graft_pos", col("_metadata.row_index"))
-        val dvCands = candidates.map(_._1).filter(_.dvPath.isDefined)
-        if (dvCands.nonEmpty) {
-          val dead = spark.read
-            .parquet(dvCands.flatMap(_.dvPath).distinct.map(p => s"$root/$p"): _*)
-            .select(element_at(split(col("file"), "/"), -1).as("__graft_file"),
-              col("pos").as("__graft_pos"))
-          probe = probe.join(dead, Seq("__graft_file", "__graft_pos"),
-            "left_anti")
-        }
-        probe.join(srcAll.select(keys.map(col): _*), keys, "left_semi")
-          .groupBy(col("__graft_file")).count()
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      }
-    def mergeNameOf(p: String): String = p.substring(p.lastIndexOf('/') + 1)
-    // ---- batched rewrites (round-6 phase 2, same shape as rewriteWhere):
-    // all matched candidates are read in ONE DV-masked job, joined with
-    // the staged feed ONCE on the natural key (the per-file bucket slice
-    // was pruning only — source keys are unique, so the left join yields
-    // at most one source row per target row), and the CDC images /
-    // replacement rows written by ONE dynamic-partitioned job each,
-    // partitioned by source file and sorted by original row position —
-    // per-file content and order identical to the per-file writer's.
-    val mergeMatchedCands: Seq[((DataFileMeta, Int), Int)] =
-      if (matched.isEmpty) Nil
-      else candidates.zipWithIndex.filter { case ((f, _), _) =>
-        matchedByName.getOrElse(mergeNameOf(f.path), 0L) > 0L
-      }
-    val results: IndexedSeq[(Int, String, Long, ChangeFileMeta, Option[(Long, Int, DataFileMeta)])] =
-      if (mergeMatchedCands.isEmpty) IndexedSeq.empty
-      else {
-        def matchedOf(f: DataFileMeta): Long = matchedByName(mergeNameOf(f.path))
-        // full drops exist only for WHEN MATCHED DELETE with every
-        // survivor matched — same rule as the round-5 per-file path
-        val dropNames: Set[String] = matched.get match {
-          case MergeDeleteMatched => mergeMatchedCands.collect {
-            case ((f, _), _) if matchedOf(f) == f.rowCount => mergeNameOf(f.path)
-          }.toSet
-          case _ => Set.empty
-        }
-        val schemaFull = fullReadSchema
-        // DV-aware combined read (same rule as rewriteWhere): rows a prior
-        // deletion vector killed are ALREADY deleted — invisible to the
-        // full-drop count, the CDC images and the rewrite (whose
-        // replacement publishes vector-free, folding the DV). Without this
-        // a MERGE over a MOR-deleted file would resurrect the purged rows.
-        // __graft_pos (original row index) doubles as the row-order pin —
-        // still the file order after the anti-join.
-        var allT = spark.read.schema(schemaFull)
-          .parquet(mergeMatchedCands.map { case ((f, _), _) => s"$root/${f.path}" }: _*)
-          .withColumn("__graft_file",
-            element_at(split(col("_metadata.file_path"), "/"), -1))
-          .withColumn("__graft_pos", col("_metadata.row_index"))
-        val dvPrior = mergeMatchedCands.map(_._1._1).filter(_.dvPath.isDefined)
-        if (dvPrior.nonEmpty) {
-          val dead = spark.read
-            .parquet(dvPrior.flatMap(_.dvPath).distinct.map(p => s"$root/$p"): _*)
-            .select(element_at(split(col("file"), "/"), -1).as("__graft_file"),
-              col("pos").as("__graft_pos"))
-          allT = allT.join(dead, Seq("__graft_file", "__graft_pos"), "left_anti")
-        }
-        val outCols = schemaFull.fieldNames.toSeq
-        val bookCols = Seq("__graft_file", "__graft_pos")
-        val t = allT.alias("t")
-        val s = srcAll.drop("__graft_b").alias("s")
-        val joined = t.join(s,
-          keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _), "left")
-        val hitS = col("s.conv_id").isNotNull
-        def tSide(extra: Seq[org.apache.spark.sql.Column] = Nil) =
-          outCols.map(c => col(s"t.$c").as(c)) ++
-            bookCols.map(c => col(s"t.$c").as(c)) ++ extra
-        val (replacementAll, cdcFrames) = matched.get match {
-          case MergeUpdateAll | MergeUpdateCols(_) =>
-            // CDC images from the SAME join the rewrite uses: pre = the
-            // matched target rows as they were, post = with the source's
-            // values applied
-            val hits = joined.filter(hitS)
-            val pre = hits.select(tSide(): _*)
-            val post = hits.select(outCols.map {
-              case c if updateCols.contains(c) => col(s"s.$c").as(c)
-              case other => col(s"t.$other").as(other)
-            } ++ bookCols.map(c => col(s"t.$c").as(c)): _*)
-            (Some(joined.select(outCols.map {
-              case c if updateCols.contains(c) =>
-                when(hitS, col(s"s.$c")).otherwise(col(s"t.$c")).as(c)
-              case other => col(s"t.$other").as(other)
-            } ++ bookCols.map(c => col(s"t.$c").as(c)): _*)),
-              Seq("update_preimage" -> pre, "update_postimage" -> post))
-          case MergeDeleteMatched =>
-            val pre = joined.filter(hitS).select(tSide(): _*)
-            (Some(joined.filter(!hitS).select(tSide(): _*)),
-              Seq("delete" -> pre))
-        }
-        // --- CDC rows for every matched file, one job
-        val nFrames = cdcFrames.size
-        val cdcAll = cdcFrames.zipWithIndex.map { case ((kind, d), fi) =>
-          d.select(outCols.map(col) ++ Seq(
-            lit(kind).as(TableChanges.ChangeTypeCol),
-            col("__graft_file"), lit(fi).as("__graft_frame"),
-            col("__graft_pos")): _*)
-        }.reduce(_ unionAll _)
-        val cdcOut = stagingSrc.resolve("cdcbatch")
-        cdcAll.repartition(col("__graft_file"))
-          .sortWithinPartitions(col("__graft_file"), col("__graft_frame"),
-            col("__graft_pos"))
-          .select(outCols.map(col) ++ Seq(col(TableChanges.ChangeTypeCol),
-            col("__graft_file")): _*)
-          .write.partitionBy("__graft_file").mode("overwrite")
-          .parquet(cdcOut.toString)
-        // --- replacement rows, one job (full drops contribute no
-        // survivors, so no partition directory appears for them)
-        val rwOut = stagingSrc.resolve("rwbatch")
-        val anyRewrite = mergeMatchedCands.exists { case ((f, _), _) =>
-          !dropNames(mergeNameOf(f.path)) }
-        if (anyRewrite) {
-          replacementAll.get
-            .filter(if (dropNames.isEmpty) lit(true)
-              else !col("__graft_file").isin(dropNames.toSeq: _*))
-            .repartition(col("__graft_file"))
-            .sortWithinPartitions(col("__graft_file"), col("__graft_pos"))
-            .select(outCols.map(col) :+ col("__graft_file"): _*)
-            .write.partitionBy("__graft_file").mode("overwrite")
-            .parquet(rwOut.toString)
-        }
-        // --- claim per-candidate outputs under deterministic names
-        import scala.collection.parallel.CollectionConverters._
-        def claimed(outDir: Path, dirName: String, dst: Path): Path = {
-          val src = listDir(outDir.resolve(dirName))(
-            _.filter(_.getFileName.toString.endsWith(".parquet")).toSeq).head
-          claimFrom(src, dst, committed = Files.exists(deletePath(gen)))
-          Files.deleteIfExists(src)
-          dst
-        }
-        Files.createDirectories(dataDir)
-        Files.createDirectories(changesDir)
-        mergeMatchedCands.par.map { case ((f, _), idx) =>
-          val name = mergeNameOf(f.path)
-          val m = matchedOf(f)
-          val cdcName = f"cdc-$gen%04d-$idx%05d.parquet"
-          claimed(cdcOut, s"__graft_file=$name", changesDir.resolve(cdcName))
-          val cf = ChangeFileMeta(s"changes/$cdcName", m * nFrames)
-          val add: Option[(Long, Int, DataFileMeta)] =
-            if (dropNames(name)) None
-            else {
-              val rwName = f"part-d$gen%04d-$idx%05d.parquet"
-              val dst = claimed(rwOut, s"__graft_file=$name",
-                dataDir.resolve(rwName))
-              Some((srcEpoch.getOrElse(f.path, -1L),
-                bucketsOf.getOrElse(f.path, -1),
-                footerStats(dst, gen, f.partitionId, s"data/$rwName")))
-            }
-          (idx, f.path, m, cf, add)
-        }.toIndexedSeq.sortBy(_._1)
-      }
-    val removes = results.map(_._2)
-    val matchedRows = results.map(_._3).sum
-    val mergeChangeFiles = results.map(_._4)
-    val adds = results.flatMap(_._5)
+    val feed = srcAll.drop("__graft_b")
 
     var inserted = 0L
     var insertEpoch: Option[Long] = None
@@ -1210,12 +1029,10 @@ final class IcebergLite(val root: String) {
         // DV-aware: a key that exists ONLY in MOR-deleted rows is NOT
         // matched — its source row must insert (readEntries anti-joins
         // each file's vector; raw parquet here would silently drop it)
-        else readEntries(spark, keySchema, candidates.map(_._1))
-      val notMatched = srcAll.drop("__graft_b").join(targetKeys, keys, "left_anti")
+        else readEntries(spark, keySchema, candidates)
+      val notMatched = feed.join(targetKeys, keys, "left_anti")
       // stage FIRST and take the insert count from the staged files'
-      // footer row counts (exact) — the round-5 shape executed the
-      // anti-join twice, once for count() and once for the write
-      // (round-6, guide §1.2 "don't compute things you throw away")
+      // footer row counts (exact), so the anti-join runs once
       val epoch = nextEpochId
       withEpochLock(epoch) {
         val files = stageAndPublish(notMatched, epoch, n)
@@ -1231,255 +1048,264 @@ final class IcebergLite(val root: String) {
       }
     }
 
-    deleteRecursively(stagingSrc)
-    if (removes.isEmpty && insertEpoch.isEmpty)
-      return MergeStats(matchedRows, 0L, None)
-    // THE atomic commit: rewrites + insert activation in one manifest.
-    // The insert epoch records NO change file — the feed serves it from
-    // its own epoch files as `insert` rows, exactly-once, like any epoch.
-    writeRewriteManifest(gen, description, removes, adds,
-      affectsCompacted = removes.exists(p => !srcEpoch.contains(p)),
-      activatesEpoch = insertEpoch, changeFiles = mergeChangeFiles)
+    // matched rows: the target joined with the staged feed ONCE on the
+    // natural key (source keys are unique, so the left join yields at most
+    // one source row per target row); the CDC images come from the SAME
+    // join the rewrite uses
+    def frames(all: DataFrame): (DataFrame, Seq[(String, DataFrame)]) = {
+      val bookCols = Seq("__graft_file", "__graft_pos")
+      val outCols = all.columns.toSeq.filterNot(bookCols.contains)
+      val joined = all.alias("t").join(feed.alias("s"),
+        keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _), "left")
+      val hitS = col("s.conv_id").isNotNull
+      def tCol(c: String) = col(s"t.$c").as(c)
+      val target = (outCols ++ bookCols).map(tCol)
+      def assigned(c: String) =
+        if (updateCols.contains(c)) col(s"s.$c").as(c) else tCol(c)
+      matched.get match {
+        case MergeDeleteMatched =>
+          (joined.filter(!hitS).select(target: _*),
+            Seq("delete" -> joined.filter(hitS).select(target: _*)))
+        case _ =>
+          val hits = joined.filter(hitS)
+          (joined.select(outCols.map { c =>
+            if (updateCols.contains(c))
+              when(hitS, col(s"s.$c")).otherwise(col(s"t.$c")).as(c)
+            else tCol(c)
+          } ++ bookCols.map(tCol): _*),
+            Seq("update_preimage" -> hits.select(target: _*),
+              "update_postimage" -> hits.select(
+                outCols.map(assigned) ++ bookCols.map(tCol): _*)))
+      }
+    }
+    val matchedRows = mutate(spark, gen, stagingSrc, base,
+      if (matched.isEmpty) Nil else candidates,
+      _.join(feed.select(keys.map(col): _*), keys, "left_semi"), frames,
+      dropFullyMatched = matched.contains(MergeDeleteMatched), mor = false,
+      description, activatesEpoch = insertEpoch)
     MergeStats(matchedRows, inserted, insertEpoch)
   }
 
-  /** Shared copy-on-write core of [[deleteWhere]] / [[updateWhere]]:
-    * manifest-pruned candidates are probed with ONE column-pruned batched
-    * count job (only the predicate's columns are decoded — a
-    * false-positive candidate never pays a text read); `rewriteAll` is a
-    * ROW-WISE transform (filter/projection) applied to the combined
-    * matched-file frame — it must preserve the `__graft_file` /
-    * `__graft_pos` bookkeeping columns, which both callers' transforms do
-    * by construction. `dropFullyMatched` = a file whose every survivor
-    * matched is dropped outright instead of rewritten (DELETE semantics).
-    * Publishes one atomic `delete-<gen>.json` manifest; returns total
-    * matched rows. */
+  /** Predicate-driven entry to [[mutate]] for [[deleteWhere]],
+    * [[deleteWhereMor]] and [[updateWhere]]: candidates are manifest-pruned
+    * by `prune` and probed by `condition` (a NULL predicate never matches);
+    * `frames` receives the matched files' rows and the match column. */
   private def rewriteWhere(spark: SparkSession,
                            condition: org.apache.spark.sql.Column,
                            predicateText: String,
                            prune: Seq[FileSet] => Seq[DataFileMeta],
-                           mor: Boolean = false)(
-      rewriteAll: (DataFrame, org.apache.spark.sql.Column) => DataFrame,
-      dropFullyMatched: Boolean,
-      changeRows: (DataFrame, org.apache.spark.sql.Column) => Seq[(String, DataFrame)]): Long =
+                           mor: Boolean, dropFullyMatched: Boolean)(
+      frames: (DataFrame, org.apache.spark.sql.Column) =>
+        (DataFrame, Seq[(String, DataFrame)])): Long =
     withMaintenanceLock {
       require(exists, s"IcebergLite table does not exist at $root")
       val base = effectiveFileSets
       val candidates = prune(base)
       if (candidates.isEmpty) return 0L
-      val bucketsOf: Map[String, Int] =
-        base.flatMap(fs => fs.files.map(_.path -> fs.numBuckets)).toMap
-      // source epoch per path: epoch snapshots, else the delete add-set
-      // that produced it, else −1 (compaction-generation data)
-      val srcEpoch: Map[String, Long] =
-        snapshots.flatMap(s => s.files.map(_.path -> s.epochId)).toMap ++
-          deletes.flatMap(_.fileSets.flatMap(fs =>
-            fs.files.map(_.path -> fs.sourceEpoch)))
       val gen = nextRewriteGen()
       val staging = Paths.get(root, "_staging", s"delete-$gen")
       deleteRecursively(staging)
-      spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       val hit = coalesce(condition, lit(false))
-      // MOR threshold: a file whose matched fraction exceeds this is
-      // rewritten copy-on-write even under mor=true (a vector holding most
-      // of a file is worse than the rewrite it avoids)
-      val dvMaxFraction = spark.conf
-        .get("spark.sql.graft.dvMaxFraction", "0.2").toDouble
-      // ---- batched probe (round-6, guide §1.2 "the distributed
-      // algorithm" / §2.4): ONE job computes every candidate's matched
-      // count. The round-5 shape ran one column-pruned count job PER
-      // candidate file — dozens of driver-planned jobs per mutation whose
-      // per-job fixed cost dwarfed the actual scan at epoch-file sizes.
-      // A single scan over all candidates keyed by `_metadata` file name
-      // computes the same counts in one pass (file NAMES are unique per
-      // table: the data dir is flat), with prior deletion vectors
-      // anti-joined in the same job so MOR-deleted rows stay invisible to
-      // the predicate exactly as before.
-      import scala.collection.parallel.CollectionConverters._
-      val probeSchema = fullReadSchema
-      var probeDf = spark.read.schema(probeSchema)
-        .parquet(candidates.map(f => s"$root/${f.path}"): _*)
-        .withColumn("__graft_file",
-          element_at(split(col("_metadata.file_path"), "/"), -1))
-        .withColumn("__graft_pos", col("_metadata.row_index"))
-      val dvCands = candidates.filter(_.dvPath.isDefined)
-      if (dvCands.nonEmpty) {
-        val dead = spark.read
-          .parquet(dvCands.flatMap(_.dvPath).distinct.map(p => s"$root/$p"): _*)
-          .select(element_at(split(col("file"), "/"), -1).as("__graft_file"),
-            col("pos").as("__graft_pos"))
-        probeDf = probeDf.join(dead, Seq("__graft_file", "__graft_pos"),
-          "left_anti")
-      }
-      val matchedByName: Map[String, Long] = probeDf.filter(hit)
+      mutate(spark, gen, staging, base, candidates, _.filter(hit),
+        frames(_, hit), dropFullyMatched, mor, predicateText)
+    }
+
+  /** Source epoch per data path: epoch snapshots, else the rewrite add-set
+    * that produced it. A path in neither is compaction-generation data. */
+  private def sourceEpochs: Map[String, Long] =
+    snapshots.flatMap(s => s.files.map(_.path -> s.epochId)).toMap ++
+      deletes.flatMap(_.fileSets.flatMap(fs =>
+        fs.files.map(_.path -> fs.sourceEpoch)))
+
+  /** `files`' rows (read under `schema`) with their file name
+    * (`__graft_file`) and original row position (`__graft_pos`), minus the
+    * rows a prior deletion vector already deleted. Positions stay
+    * original-file coordinates, so they also pin each file's row order. */
+  private def dvMaskedRead(spark: SparkSession, schema: StructType,
+                           files: Seq[DataFileMeta]): DataFrame = {
+    val rows = spark.read.schema(schema)
+      .parquet(files.map(f => s"$root/${f.path}"): _*)
+      .withColumn("__graft_file",
+        element_at(split(col("_metadata.file_path"), "/"), -1))
+      .withColumn("__graft_pos", col("_metadata.row_index"))
+    val vectors = files.flatMap(_.dvPath)
+    if (vectors.isEmpty) rows
+    else rows.join(
+      readVectors(spark, vectors).select(col("__graft_file"),
+        col("pos").as("__graft_pos")),
+      Seq("__graft_file", "__graft_pos"), "left_anti")
+  }
+
+  /** Deletion-vector rows (`file`, `pos`) keyed by data file name. */
+  private def readVectors(spark: SparkSession, dvPaths: Seq[String]): DataFrame =
+    spark.read.parquet(dvPaths.distinct.map(p => s"$root/$p"): _*)
+      .select(element_at(split(col("file"), "/"), -1).as("__graft_file"),
+        col("file"), col("pos"))
+
+  /** The one row-level mutation pipeline: copy-on-write DELETE, MOR
+    * DELETE, UPDATE and MERGE differ only in their arguments.
+    *
+    *  1. probe: ONE job over every candidate's DV-masked rows counts the
+    *     rows `probe` keeps, per file (file NAMES are unique per table:
+    *     the data dir is flat);
+    *  2. classify each matched file once: full drop (`dropFullyMatched`
+    *     and every surviving row matched), deletion vector (`mor` and a
+    *     matched fraction at most `spark.sql.graft.dvMaxFraction`), else
+    *     copy-on-write rewrite;
+    *  3. `frames` maps the matched files' DV-masked rows (a prior vector's
+    *     rows are already deleted: invisible to the CDC images and to any
+    *     rewrite, which folds the vector) to the replacement rows and the
+    *     CDC frames; both keep the `__graft_file` / `__graft_pos`
+    *     bookkeeping columns;
+    *  4. ONE job each writes the CDC rows, the replacement rows and (MOR
+    *     only) the cumulative vectors, partitioned by source file and
+    *     sorted by original row position, so each file's output is what a
+    *     per-file writer would have produced. CDC is recorded BEFORE the
+    *     manifest: a crash in between leaves unreferenced change files
+    *     that [[removeOrphans]] reclaims once the gen is settled;
+    *  5. the driver claims each partition's single output file under its
+    *     deterministic per-candidate name, then publishes ONE
+    *     `delete-<gen>.json` ([[writeRewriteManifest]]), which also
+    *     activates `activatesEpoch` (MERGE's pending inserts).
+    *
+    * `staging` is deleted before publishing. Returns total matched rows. */
+  private def mutate(spark: SparkSession, gen: Long, staging: Path,
+                     base: Seq[FileSet], candidates: Seq[DataFileMeta],
+                     probe: DataFrame => DataFrame,
+                     frames: DataFrame => (DataFrame, Seq[(String, DataFrame)]),
+                     dropFullyMatched: Boolean, mor: Boolean,
+                     predicateText: String,
+                     activatesEpoch: Option[Long] = None): Long = {
+    import scala.collection.parallel.CollectionConverters._
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    lazy val schema = fullReadSchema
+    lazy val srcEpoch = sourceEpochs
+    def nameOf(p: String): String = p.substring(p.lastIndexOf('/') + 1)
+    val matchedByName: Map[String, Long] =
+      if (candidates.isEmpty) Map.empty
+      else probe(dvMaskedRead(spark, schema, candidates))
         .groupBy(col("__graft_file")).count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      def nameOf(p: String): String = p.substring(p.lastIndexOf('/') + 1)
-      // ---- batched writes (round-6 phase 2, guide §1.2): the round-5
-      // shape launched one CDC-write job and one rewrite/DV-write job PER
-      // matched file (measured: a fixture-wide DELETE was ~100 driver-
-      // planned 1-task jobs whose scheduling latency dominated the gate).
-      // All matched candidates are now read in ONE DV-masked job and their
-      // change rows / replacement rows / vector positions written by ONE
-      // dynamic-partitioned job each (partitioned by source file, each
-      // partition sorted by original row position so per-file content and
-      // order are byte-for-byte what the per-file writer produced); the
-      // driver then only claims each partition's single output file under
-      // its deterministic name and reads rewrite footers.
-      val matchedCands: Seq[(DataFileMeta, Int)] = candidates.zipWithIndex
-        .filter { case (f, _) => matchedByName.getOrElse(nameOf(f.path), 0L) > 0L }
-      val results: IndexedSeq[(Int, String, Long, ChangeFileMeta, Option[(Long, Int, DataFileMeta)])] =
-        if (matchedCands.isEmpty) IndexedSeq.empty
-        else {
-          def matchedOf(f: DataFileMeta): Long = matchedByName(nameOf(f.path))
-          // classify each matched candidate ONCE: full drop (delete with
-          // every survivor matched), deletion vector (MOR, small
-          // fraction), copy-on-write rewrite — same rules as round 5
-          val dvSel = matchedCands.filter { case (f, _) =>
-            mor && matchedOf(f) < f.rowCount &&
-              matchedOf(f).toDouble / f.rowCount <= dvMaxFraction
-          }
-          val dvNames = dvSel.map { case (f, _) => nameOf(f.path) }.toSet
-          val dropNames = matchedCands.collect {
-            case (f, _) if dropFullyMatched && matchedOf(f) == f.rowCount =>
-              nameOf(f.path)
-          }.toSet
-          val rwSel = matchedCands.filter { case (f, _) =>
-            !dvNames(nameOf(f.path)) && !dropNames(nameOf(f.path))
-          }
-          // ONE combined DV-masked frame over the matched candidates (a
-          // prior vector's rows are ALREADY deleted — invisible to the
-          // CDC recording and to any rewrite, which folds the vector;
-          // __graft_pos keeps original-file coordinates)
-          var all = spark.read.schema(probeSchema)
-            .parquet(matchedCands.map { case (f, _) => s"$root/${f.path}" }: _*)
-            .withColumn("__graft_file",
-              element_at(split(col("_metadata.file_path"), "/"), -1))
-            .withColumn("__graft_pos", col("_metadata.row_index"))
-          val dvPrior = matchedCands.map(_._1).filter(_.dvPath.isDefined)
-          if (dvPrior.nonEmpty) {
-            val dead = spark.read
-              .parquet(dvPrior.flatMap(_.dvPath).distinct.map(p => s"$root/$p"): _*)
-              .select(element_at(split(col("file"), "/"), -1).as("__graft_file"),
-                col("pos").as("__graft_pos"))
-            all = all.join(dead, Seq("__graft_file", "__graft_pos"), "left_anti")
-          }
-          val outCols = probeSchema.fieldNames.toSeq
-          // --- CDC rows for every matched file, one job. Record BEFORE
-          // the manifest (crash in between leaves unreferenced change
-          // files; removeOrphans reclaims them once the gen is settled).
-          val cdcFrames = changeRows(all, hit)
-          val nFrames = cdcFrames.size
-          val cdcAll = cdcFrames.zipWithIndex.map { case ((kind, d), fi) =>
-            d.select(outCols.map(col) ++ Seq(
-              lit(kind).as(TableChanges.ChangeTypeCol),
-              col("__graft_file"), lit(fi).as("__graft_frame"),
-              col("__graft_pos")): _*)
-          }.reduce(_ unionAll _)
-          val cdcOut = staging.resolve("cdcbatch")
-          cdcAll.repartition(col("__graft_file"))
-            .sortWithinPartitions(col("__graft_file"), col("__graft_frame"),
-              col("__graft_pos"))
-            .select(outCols.map(col) ++ Seq(col(TableChanges.ChangeTypeCol),
-              col("__graft_file")): _*)
-            .write.partitionBy("__graft_file").mode("overwrite")
-            .parquet(cdcOut.toString)
-          // --- copy-on-write replacements, one job (original row order
-          // preserved by the per-partition (file, position) sort)
-          val rwNames = rwSel.map { case (f, _) => nameOf(f.path) }
-          val rwOut = staging.resolve("rwbatch")
-          if (rwSel.nonEmpty) {
-            rewriteAll(all.filter(col("__graft_file").isin(rwNames: _*)), hit)
-              .repartition(col("__graft_file"))
-              .sortWithinPartitions(col("__graft_file"), col("__graft_pos"))
-              .select(outCols.map(col) :+ col("__graft_file"): _*)
-              .write.partitionBy("__graft_file").mode("overwrite")
-              .parquet(rwOut.toString)
-          }
-          // --- deletion vectors, one job: each MOR file's cumulative
-          // vector (this delete's positions ∪ its prior vector), sorted
-          val dvOut = staging.resolve("dvbatch")
-          if (dvSel.nonEmpty) {
-            val dvSelNames = dvSel.map { case (f, _) => nameOf(f.path) }
-            var allPos = all
-              .filter(col("__graft_file").isin(dvSelNames: _*) && hit)
-              .select(col("__graft_file").as("__dvname"),
-                concat(lit("data/"), col("__graft_file")).as("file"),
-                col("__graft_pos").as("pos"))
-            val priors = dvSel.map(_._1).filter(_.dvPath.isDefined)
-            if (priors.nonEmpty) {
-              val old = spark.read
-                .parquet(priors.flatMap(_.dvPath).distinct.map(p => s"$root/$p"): _*)
-                .select(element_at(split(col("file"), "/"), -1).as("__dvname"),
-                  col("file"), col("pos"))
-              allPos = allPos.unionByName(old)
-            }
-            allPos.repartition(col("__dvname"))
-              .sortWithinPartitions(col("__dvname"), col("pos"))
-              .write.partitionBy("__dvname").mode("overwrite")
-              .parquet(dvOut.toString)
-          }
-          // --- claim each partition's single file under its deterministic
-          // per-candidate name (driver-side renames + footer stats only)
-          def claimed(outDir: Path, dirName: String, dst: Path): Path = {
-            val src = listDir(outDir.resolve(dirName))(
-              _.filter(_.getFileName.toString.endsWith(".parquet")).toSeq).head
-            claimFrom(src, dst, committed = Files.exists(deletePath(gen)))
-            Files.deleteIfExists(src)
-            dst
-          }
-          Files.createDirectories(dataDir)
-          Files.createDirectories(changesDir)
-          matchedCands.par.map { case (f, idx) =>
-            val name = nameOf(f.path)
-            val matched = matchedOf(f)
-            val cdcName = f"cdc-$gen%04d-$idx%05d.parquet"
-            claimed(cdcOut, s"__graft_file=$name", changesDir.resolve(cdcName))
-            val cf = ChangeFileMeta(s"changes/$cdcName", matched * nFrames)
-            val add: Option[(Long, Int, DataFileMeta)] =
-              if (dropNames(name)) None
-              else if (dvNames(name)) {
-                val dvName = f"dv-$gen%04d-$idx%05d.parquet"
-                claimed(dvOut, s"__dvname=$name", dataDir.resolve(dvName))
-                // same MOR manifest entry as round 5's publishDvFile:
-                // SAME data path, exact survivor rowCount, conservative
-                // original stats, cumulative dvRows
-                val meta = f.copy(rowCount = f.rowCount - matched,
-                  convIdNulls = f.convIdNulls.filter(_ == 0L),
-                  dvPath = Some(s"data/$dvName"),
-                  dvRows = f.dvPath match {
-                    case None => Some(matched)
-                    case Some(_) => f.dvRows.map(_ + matched)
-                  })
-                Some((srcEpoch.getOrElse(f.path, -1L),
-                  bucketsOf.getOrElse(f.path, -1), meta))
-              } else {
-                val rwName = f"part-d$gen%04d-$idx%05d.parquet"
-                val dst = claimed(rwOut, s"__graft_file=$name",
-                  dataDir.resolve(rwName))
-                Some((srcEpoch.getOrElse(f.path, -1L),
-                  bucketsOf.getOrElse(f.path, -1),
-                  footerStats(dst, gen, f.partitionId, s"data/$rwName")))
-              }
-            (idx, f.path, matched, cf, add)
-          }.toIndexedSeq.sortBy(_._1)
+    def matchedOf(f: DataFileMeta): Long = matchedByName.getOrElse(nameOf(f.path), 0L)
+    val matchedCands = candidates.zipWithIndex.filter { case (f, _) => matchedOf(f) > 0L }
+    val results: IndexedSeq[(Int, String, Long, ChangeFileMeta, Option[(Long, Int, DataFileMeta)])] =
+      if (matchedCands.isEmpty) IndexedSeq.empty
+      else {
+        // MOR threshold: a file whose matched fraction exceeds this is
+        // rewritten copy-on-write (a vector holding most of a file is worse
+        // than the rewrite it avoids)
+        val dvMaxFraction = spark.conf
+          .get("spark.sql.graft.dvMaxFraction", "0.2").toDouble
+        val dvFiles = matchedCands.map(_._1).filter { f =>
+          mor && matchedOf(f) < f.rowCount &&
+            matchedOf(f).toDouble / f.rowCount <= dvMaxFraction
         }
-      val removes = results.map(_._2)
-      val matchedRows = results.map(_._3).sum
-      val changeFiles = results.map(_._4)
-      val adds = results.flatMap(_._5)
-      deleteRecursively(staging)
-      if (removes.isEmpty) return 0L
-      // affectsCompacted is true when compaction-generation data was
-      // touched: per-epoch stream patching is impossible for replaced
-      // epochs (their raw files predate the generation), so lagging
-      // streams must fail loudly instead of replaying purged rows — see
-      // the DSv2 source guard
-      writeRewriteManifest(gen, predicateText, removes, adds,
-        affectsCompacted = removes.exists(p => !srcEpoch.contains(p)),
-        activatesEpoch = None, changeFiles = changeFiles)
-      matchedRows
-    }
+        val dvNames = dvFiles.map(f => nameOf(f.path)).toSet
+        val dropNames = matchedCands.collect {
+          case (f, _) if dropFullyMatched && matchedOf(f) == f.rowCount =>
+            nameOf(f.path)
+        }.toSet
+        val rwNames = matchedCands.map { case (f, _) => nameOf(f.path) }
+          .filterNot(n => dvNames(n) || dropNames(n))
+        val all = dvMaskedRead(spark, schema, matchedCands.map(_._1))
+        val (replacement, changes) = frames(all)
+        val outCols = schema.fieldNames.toSeq
+        // one dynamic-partitioned job per output kind; maxRecordsPerFile is
+        // pinned so each partition holds exactly one file to claim
+        def writeByFile(df: DataFrame, order: Seq[String], keep: Seq[String],
+                        out: Path): Unit =
+          df.repartition(col("__graft_file"))
+            .sortWithinPartitions(("__graft_file" +: order).map(col): _*)
+            .select((keep :+ "__graft_file").map(col): _*)
+            .write.partitionBy("__graft_file").mode("overwrite")
+            .option("maxRecordsPerFile", 0)
+            .parquet(out.toString)
+        val cdcOut = staging.resolve("cdcbatch")
+        writeByFile(changes.zipWithIndex.map { case ((kind, d), fi) =>
+          d.select(outCols.map(col) ++ Seq(
+            lit(kind).as(TableChanges.ChangeTypeCol),
+            col("__graft_file"), lit(fi).as("__graft_frame"),
+            col("__graft_pos")): _*)
+        }.reduce(_ unionAll _), Seq("__graft_frame", "__graft_pos"),
+          outCols :+ TableChanges.ChangeTypeCol, cdcOut)
+        val rwOut = staging.resolve("rwbatch")
+        if (rwNames.nonEmpty)
+          writeByFile(replacement.filter(col("__graft_file").isin(rwNames: _*)),
+            Seq("__graft_pos"), outCols, rwOut)
+        // each MOR file's cumulative vector: this mutation's positions ∪
+        // its prior vector
+        val dvOut = staging.resolve("dvbatch")
+        if (dvFiles.nonEmpty) {
+          val fresh = probe(all.filter(col("__graft_file").isin(dvNames.toSeq: _*)))
+            .select(col("__graft_file"),
+              concat(lit("data/"), col("__graft_file")).as("file"),
+              col("__graft_pos").as("pos"))
+          val priors = dvFiles.flatMap(_.dvPath)
+          writeByFile(
+            if (priors.isEmpty) fresh
+            else fresh.unionByName(readVectors(spark, priors)),
+            Seq("pos"), Seq("file", "pos"), dvOut)
+        }
+        // THE claim: one file per partition directory, or fail loudly — a
+        // rolled-over second file would otherwise be dropped silently
+        def claimed(outDir: Path, name: String, dst: Path): Path = {
+          val dir = outDir.resolve(s"__graft_file=$name")
+          val parts = listDir(dir)(
+            _.filter(_.getFileName.toString.endsWith(".parquet")).toSeq)
+          if (parts.size != 1) throw new IllegalStateException(
+            s"mutation gen $gen: expected exactly one parquet file in $dir, " +
+              s"found ${parts.size}; refusing to publish a partial rewrite")
+          claimFrom(parts.head, dst, committed = Files.exists(deletePath(gen)))
+          Files.deleteIfExists(parts.head)
+          dst
+        }
+        val bucketsOf: Map[String, Int] =
+          base.flatMap(fs => fs.files.map(_.path -> fs.numBuckets)).toMap
+        Files.createDirectories(dataDir)
+        Files.createDirectories(changesDir)
+        matchedCands.par.map { case (f, idx) =>
+          val name = nameOf(f.path)
+          val m = matchedOf(f)
+          val cdcName = f"cdc-$gen%04d-$idx%05d.parquet"
+          claimed(cdcOut, name, changesDir.resolve(cdcName))
+          val cf = ChangeFileMeta(s"changes/$cdcName", m * changes.size)
+          def added(meta: DataFileMeta) =
+            Some((srcEpoch.getOrElse(f.path, -1L), bucketsOf.getOrElse(f.path, -1), meta))
+          val add: Option[(Long, Int, DataFileMeta)] =
+            if (dropNames(name)) None
+            else if (dvNames(name)) {
+              val dvName = f"dv-$gen%04d-$idx%05d.parquet"
+              claimed(dvOut, name, dataDir.resolve(dvName))
+              // SAME data path, exact survivor rowCount, conservative
+              // original stats, cumulative dvRows
+              added(f.copy(rowCount = f.rowCount - m,
+                convIdNulls = f.convIdNulls.filter(_ == 0L),
+                dvPath = Some(s"data/$dvName"),
+                dvRows = f.dvPath match {
+                  case None => Some(m)
+                  case Some(_) => f.dvRows.map(_ + m)
+                }))
+            } else {
+              val rwName = f"part-d$gen%04d-$idx%05d.parquet"
+              val dst = claimed(rwOut, name, dataDir.resolve(rwName))
+              added(footerStats(dst, gen, f.partitionId, s"data/$rwName"))
+            }
+          (idx, f.path, m, cf, add)
+        }.toIndexedSeq.sortBy(_._1)
+      }
+    deleteRecursively(staging)
+    val removes = results.map(_._2)
+    if (removes.isEmpty && activatesEpoch.isEmpty) return 0L
+    // affectsCompacted is true when compaction-generation data was
+    // touched: per-epoch stream patching is impossible for replaced
+    // epochs (their raw files predate the generation), so lagging
+    // streams must fail loudly instead of replaying purged rows — see
+    // the DSv2 source guard
+    writeRewriteManifest(gen, predicateText, removes, results.flatMap(_._5),
+      affectsCompacted = removes.exists(p => !srcEpoch.contains(p)),
+      activatesEpoch = activatesEpoch, changeFiles = results.map(_._4))
+    results.map(_._3).sum
+  }
 
   /** Atomic publication of a copy-on-write rewrite: ONE
     * `delete-<gen>.json` that removes `removes`, adds the rewritten
@@ -1585,10 +1411,7 @@ final class IcebergLite(val root: String) {
       val targetKeys = target.flatMap(_._2.files.map(f => (f.path, f.dvPath))).toSet
       if (liveKeys == targetKeys) return RestoreStats(-1L, 0, 0, 0L)
 
-      val srcEpoch: Map[String, Long] =
-        snapshots.flatMap(s => s.files.map(_.path -> s.epochId)).toMap ++
-          deletes.flatMap(_.fileSets.flatMap(fs =>
-            fs.files.map(_.path -> fs.sourceEpoch)))
+      val srcEpoch = sourceEpochs
       val gen = nextRewriteGen()
       val staging = Paths.get(root, "_staging", s"delete-$gen")
       deleteRecursively(staging)

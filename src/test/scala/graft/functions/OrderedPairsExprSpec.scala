@@ -50,6 +50,14 @@ class OrderedPairsExprSpec extends SparkSpec {
     intercept[org.apache.spark.sql.AnalysisException] {
       Seq("a").toDF("s").select(OrderedPairsExpr.pairsCol(col("s"))).collect()
     }
+    // array<bigint> whose elements may be null: rejected, not read as 0
+    val nullable = Seq(Seq[java.lang.Long](1L, null)).toDF("ds")
+    assert(nullable.schema("ds").dataType === org.apache.spark.sql.types
+      .ArrayType(org.apache.spark.sql.types.LongType, containsNull = true))
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      nullable.select(OrderedPairsExpr.pairsCol(col("ds"))).collect()
+    }
+    assert(e.getMessage.contains("without null elements"), e.getMessage)
   }
 
   test("generated code compiles and runs under codegen.fallback=false") {

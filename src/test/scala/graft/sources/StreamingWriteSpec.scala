@@ -317,8 +317,8 @@ class StreamingWriteSpec extends SparkSpec {
     assert(lite.compactions.size === 2)
   }
 
-  test("flagship redaction pipeline: native sink == foreachBatch sink, " +
-      "full rows including lineage") {
+  test("flagship redaction pipeline through the native sink == " +
+      "Oracle.redactAll: rows, session_id and text_redacted") {
     import spark.implicits._
     import graft.stream.Pipeline
     val srcDir = tmpDir("pipe-parity-src")
@@ -331,21 +331,21 @@ class StreamingWriteSpec extends SparkSpec {
         .find(_.getFileName.toString.endsWith(".parquet")).get
       Files.copy(part, Paths.get(srcDir, name))
     }
-    slice("a.parquet", (0 until 40).map(i => t(s"c${i % 5}", i, base + i)))
-    slice("b.parquet", (40 until 60).map(i => t(s"c${i % 5}", i, base + i)) :+
+    val turns = (0 until 60).map(i => t(s"c${i % 5}", i, base + i))
+    slice("a.parquet", turns.take(40))
+    slice("b.parquet", turns.drop(40) :+
       Pipeline.flushTurn((base + 100000L) * 1000000L))
 
-    def run(native: Boolean): Set[String] = {
-      val root = tmpDir(s"pipe-parity-t$native")
-      val q = Pipeline.runRedactionToTable(spark, srcDir, root,
-        tmpDir(s"pipe-parity-cp$native"), numBuckets = 4,
-        nativeSink = native)
-      q.awaitTermination()
-      new IcebergLite(root).read(spark).collect().map(_.toString).toSet
-    }
-    val (fb, nat) = (run(false), run(true))
-    assert(fb === nat)
-    assert(fb.nonEmpty)
+    val root = tmpDir("pipe-parity-t")
+    Pipeline.runRedactionToTable(spark, srcDir, root,
+      tmpDir("pipe-parity-cp"), numBuckets = 4).awaitTermination()
+    val rows = new IcebergLite(root).read(spark)
+      .select("conv_id", "turn_idx", "session_id", "text_redacted").collect()
+    val golden = graft.text.Oracle.redactAll(turns)
+      .map(r => (r.conv_id, r.turn_idx) -> (r.session_id, r.text_redacted)).toMap
+    assert(rows.length === golden.size, "row count mismatch (lost or dup rows)")
+    assert(rows.map(r => (r.getString(0), r.getInt(1)) ->
+      (r.getLong(2), r.getString(3))).toMap === golden)
   }
 
   test("Complete output mode fails loudly: the epoch protocol is " +

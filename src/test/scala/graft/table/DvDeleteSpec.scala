@@ -77,6 +77,24 @@ class DvDeleteSpec extends SparkSpec {
       .count() === 1L)
   }
 
+  test("under spark.sql.files.maxRecordsPerFile=1 a MOR delete loses no " +
+      "position: each vector is claimed as exactly one file") {
+    val t = buildTable("dv-roll")
+    val key = "spark.sql.files.maxRecordsPerFile"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    // two turns of one conv per epoch: 2 positions in each of 2 vectors
+    val purged = col("conv_id") === "conv03" && col("turn_idx").isin(0, 1, 10, 11)
+    val deleted =
+      try t.deleteWhereMor(spark, purged, "conv03 turns 0, 1, 10, 11")
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(deleted === 4L)
+    assert(t.effectiveFiles.count(_.dvPath.isDefined) === 2)
+    assert(t.read(spark).count() === 156L)
+    assert(t.read(spark).filter(purged).count() === 0L)
+    assert(conn(t).count() === 156L)
+  }
+
   test("hybrid per file: full match drops, large fraction rewrites, small " +
       "fraction vectors — in ONE commit") {
     val t = buildTable("dv-hybrid")

@@ -78,18 +78,13 @@ class KillResumeSpec extends SparkSpec {
     assert(a === b)
   }
 
-  test("kill/resume through the NATIVE streaming sink: byte-identical, " +
-      "and identical to the foreachBatch run's table contents") {
-    def runNative(sliceDir: String, tableRoot: String, cp: String): Unit = {
-      val q = Pipeline.runRedactionToTable(spark, sliceDir, tableRoot, cp, p,
-        numBuckets = 4, maxFilesPerTrigger = 1, nativeSink = true)
-      q.awaitTermination()
-    }
+  test("kill/resume over a 6-slice corpus: the replay is byte-identical " +
+      "and the table equals an uninterrupted run's, full rows") {
     val sliceDir = tmpDir("slices-krn")
     StreamFixtures.writeSlices(spark, spec, sliceDir, k = 6)
 
     val rootA = tmpDir("tableNA"); val cpA = tmpDir("cpNA")
-    runNative(sliceDir, rootA, cpA)
+    runAll(sliceDir, rootA, cpA)
     val hashesA = dataFileHashes(rootA)
     assert(hashesA.nonEmpty)
 
@@ -97,27 +92,25 @@ class KillResumeSpec extends SparkSpec {
     // commit log entry missing → the batch replays through the native
     // writer's task-staging + first-writer-wins claim
     val rootB = tmpDir("tableNB"); val cpB = tmpDir("cpNB")
-    runNative(sliceDir, rootB, cpB)
+    runAll(sliceDir, rootB, cpB)
     val tableB = new IcebergLite(rootB)
     val lastEpoch = tableB.snapshots.map(_.epochId).max
     Files.delete(Paths.get(rootB, "metadata", f"snap-$lastEpoch%012d.json"))
     Files.delete(Paths.get(cpB, "commits", lastEpoch.toString))
     Files.deleteIfExists(Paths.get(cpB, "commits", s".$lastEpoch.crc"))
     assert(!tableB.isCommitted(lastEpoch))
-    runNative(sliceDir, rootB, cpB)
+    runAll(sliceDir, rootB, cpB)
     assert(tableB.isCommitted(lastEpoch))
     val hashesB = dataFileHashes(rootB)
     assert(hashesB === hashesA, "native replay must be byte-identical")
 
-    // cross-sink content parity on the same corpus (full rows, lineage
-    // included — both sinks write the same epochs and bucket layout)
+    // content parity with a third, uninterrupted run on the same corpus
+    // (full rows, lineage included)
     val rootF = tmpDir("tableNF"); val cpF = tmpDir("cpNF")
-    val qf = Pipeline.runRedactionToTable(spark, sliceDir, rootF, cpF, p,
-      numBuckets = 4, maxFilesPerTrigger = 1)
-    qf.awaitTermination()
-    val native = tableB.read(spark).collect().map(_.toString).toSet
-    val fb = new IcebergLite(rootF).read(spark).collect().map(_.toString).toSet
-    assert(native === fb)
+    runAll(sliceDir, rootF, cpF)
+    val resumed = tableB.read(spark).collect().map(_.toString).toSet
+    val fresh = new IcebergLite(rootF).read(spark).collect().map(_.toString).toSet
+    assert(resumed === fresh)
   }
 
   test("restore enforces StateFormatVersion: v1 and pre-stamp checkpoints " +

@@ -104,6 +104,25 @@ class UpdateSpec extends SparkSpec {
     assert(tools === Set("42", null))
   }
 
+  test("under spark.sql.files.maxRecordsPerFile=1 an update loses no " +
+    "row: each rewrite and CDC partition is claimed as exactly one file") {
+    val (root, t) = buildTable()
+    val key = "spark.sql.files.maxRecordsPerFile"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    val updated =
+      try t.updateWhere(spark, col("conv_id") === "conv3",
+        Seq("role" -> lit("fixed")), "roll")
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(updated === 15L) // 5 turns x 3 epochs
+    assert(t.effectiveFiles.map(_.rowCount).sum === 120L)
+    assert(t.read(spark).count() === 120L)
+    assert(t.read(spark).filter(col("role") === "fixed").count() === 15L)
+    // pre + post image of every updated row is on disk
+    val cdc = t.deletes.head.changeFiles.get
+    assert(spark.read.parquet(cdc.map(f => s"$root/${f.path}"): _*).count() === 30L)
+  }
+
   test("structural and unknown columns are rejected loudly") {
     val (_, t) = buildTable()
     val e1 = intercept[IllegalArgumentException] {
@@ -227,6 +246,10 @@ class UpdateSpec extends SparkSpec {
     val lite = new IcebergLite(s"$warehouse/db/upd")
     assert(lite.deletes.size === 1)
     assert(lite.effectiveFiles.map(_.rowCount).sum === 40L)
+
+    // the same extension-built session resolves the native SQL functions
+    assert(s2.sql("SELECT graft_shingles('a b c d e f', 5)").head()
+      .getSeq[String](0).size === 2)
 
     // time-travel views refuse UPDATE (the parser already rejects the
     // syntax; the rule's asOfEpoch guard covers programmatic relations)
